@@ -230,9 +230,13 @@ class SqsFrontDoorLoop:
                 self.skipped.append(file.file_name)
                 continue
             try:
-                self.results.append(self.pipeline.process_file(file))
+                res = self.pipeline.process_file(file)
             except IngestionError as ex:
                 self.failures.append((file.file_name, str(ex)))
+                continue
+            self.results.append(res)
+            if res.status == "Success":
+                done.add(file.file_name)  # a same-batch duplicate skips
 
     def start(self, available_now: bool = True, processing_interval: Optional[str] = None):
         spark: SparkSession = self.pipeline.spark

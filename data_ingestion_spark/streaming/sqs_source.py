@@ -155,10 +155,14 @@ class SqsIngestLoop:
                     self.skipped.append(file.file_name)
                     continue
                 try:
-                    self.results.append(self.pipeline.process_file(file))
+                    res = self.pipeline.process_file(file)
                 except IngestionError as ex:
                     self.failures.append((file.file_name, str(ex)))
                     ok_to_delete = False  # leave message for redelivery
+                    continue
+                self.results.append(res)
+                if res.status == "Success":
+                    done.add(file.file_name)  # a same-receive duplicate skips
             if ok_to_delete:
                 self.client.delete_message(
                     QueueUrl=self.queue_url, ReceiptHandle=m["ReceiptHandle"]

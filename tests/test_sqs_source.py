@@ -157,6 +157,26 @@ def test_redelivery_retry_is_idempotent(spark, tmp_path, landing):
     assert pipe.sink.read_table("csv_data").count() == 2 + 1
 
 
+def test_same_receive_duplicate_ingests_once(spark, tmp_path, landing):
+    # two messages naming the same key arrive in ONE receive: the replay
+    # guard read at the start of the receive must learn of the first ingest
+    pipe = make_pipe(spark, tmp_path, landing)
+    client = FakeSqsClient(
+        [s3_event(("qbucket", "uploads/a.csv")), s3_event(("qbucket", "uploads/a.csv"))]
+    )
+    loop = SqsIngestLoop(pipe, "https://sqs/q", client=client)
+    loop.run(max_polls=1)
+
+    assert client.receive_calls == 1
+    assert client.messages == [] and loop.deleted == 2  # both acked
+    assert loop.skipped == ["qbucket/uploads/a.csv"]
+    status = pipe.log.current_status().collect()
+    assert [(r["file_name"], r["status"]) for r in status] == [
+        ("qbucket/uploads/a.csv", "Success")
+    ]
+    assert pipe.sink.read_table("csv_data").count() == 2  # landed once
+
+
 def test_poison_messages_audited_and_acked(spark, tmp_path, landing):
     pipe = make_pipe(spark, tmp_path, landing)
     client = FakeSqsClient(

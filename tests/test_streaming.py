@@ -701,6 +701,35 @@ def test_sqs_front_door_checkpoint_is_exactly_once(spark, tmp_path):
     assert pipe.sink.read_table("csv_data").count() == 3
 
 
+def test_sqs_front_door_same_batch_duplicate_ingests_once(spark, tmp_path):
+    """Two messages for the same key in one micro-batch: the second is
+    replay-skipped, so the rows land once."""
+    import json as _json
+
+    from data_ingestion_spark.streaming import SqsFrontDoorLoop
+
+    data = tmp_path / "s3" / "b" / "in"
+    data.mkdir(parents=True)
+    (data / "x.csv").write_text("h\n1\n2\n")
+    msg = _json.dumps(
+        {"Records": [{"s3": {"bucket": {"name": "b"}, "object": {"key": "in/x.csv"}}}]}
+    )
+    queue = tmp_path / "q"
+    queue.mkdir()
+    (queue / "m1.json").write_text(msg + "\n")
+    (queue / "m2.json").write_text(msg + "\n")
+
+    pipe = IngestionPipeline(
+        spark, warehouse_dir=str(tmp_path / "wh"), base_dir=str(tmp_path / "s3")
+    )
+    loop = SqsFrontDoorLoop(pipe, str(queue), checkpoint_dir=str(tmp_path / "ck"))
+    loop.run_available()
+
+    assert [r.file_name for r in loop.results] == ["b/in/x.csv"]
+    assert loop.skipped == ["b/in/x.csv"]
+    assert pipe.sink.read_table("csv_data").count() == 2
+
+
 def test_batch_replay_does_not_duplicate_ingested_rows(spark, tmp_path, landing):
     """Exactly-once SINK effect, not just discovery: a micro-batch
     re-offered after a mid-batch crash (simulated by re-driving the same
