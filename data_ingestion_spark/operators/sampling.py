@@ -307,7 +307,6 @@ def assign_contiguous_ids(
     order_cols: list,
     id_col: str = "row_id",
     n_buckets: int = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """0-based CONTIGUOUS ids in ``order_cols`` order — the training-data
     primitive behind sample manifests, sequence packing, and resumable
@@ -339,10 +338,8 @@ def assign_contiguous_ids(
     # (shuffle_ids' md5 ran 3x). The callers pass metadata-scale (id, key)
     # projections, so the checkpoint is bounded. Cuts computed from the
     # materialized blocks are identical to cuts from the source: same
-    # rows, same approxQuantile sketch. r15: ``materialize=False`` opts
-    # out for already-materialized inputs (lazy-construction contract).
-    if materialize:
-        df = df.localCheckpoint(eager=True)
+    # rows, same approxQuantile sketch.
+    df = df.localCheckpoint(eager=True)
     qs = [i / n_buckets for i in range(1, n_buckets)]
     # n_buckets=1 -> no cuts, one bucket (approxQuantile rejects an empty
     # probability list)

@@ -184,7 +184,6 @@ def cms_table(
     text_col: str,
     depth: int = 4,
     width: int = 1024,
-    materialize: bool = True,
 ) -> DataFrame:
     """Count-Min sketch of the token stream as a (row, col, cnt) table
     (Cormode & Muthukrishnan, J.Alg 2005): row i counts tokens at column
@@ -209,14 +208,12 @@ def cms_table(
     # executor-local footprint drops from corpus-scale to |vocab| (the
     # r14 ADVICE executor-loss/footprint finding), and each branch now
     # hashes |vocab| rows instead of every token occurrence.
-    # ``materialize=False`` opts out (lazy-construction contract).
     tok = (
         df.select(F.explode(tokens(F.col(text_col))).alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    if materialize:
-        tok = tok.localCheckpoint(eager=True)
+    tok = tok.localCheckpoint(eager=True)
     rows = [
         tok.select(
             F.lit(i).alias("row"),

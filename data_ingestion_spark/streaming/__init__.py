@@ -2,10 +2,12 @@
 
 The reference's only "stream" is an SQS long-poll loop feeding the per-file
 pipeline (src/ecs_service.rs:113-174) — no event-time semantics anywhere.
-This package rebuilds that loop on Structured Streaming (ingest_stream) and
-adds the event-time operators Spark unlocks for free once the loop is a real
-stream: watermarked tumbling/sliding/session windows (event_time) and a
-custom stateful sessionizer (sessionize).
+This package rebuilds that loop as three transports — an SQS receive
+(sqs_source) and two Structured Streaming sources (ingest_stream) — over one
+shared per-record routing path (routing), and adds the event-time operators
+Spark unlocks for free once the loop is a real stream: watermarked
+tumbling/sliding/session windows (event_time) and a custom stateful
+sessionizer (sessionize).
 """
 
 from .event_time import (
@@ -15,7 +17,7 @@ from .event_time import (
     tumbling_window_counts,
 )
 from .ingest_stream import IngestionStreamLoop, SqsFrontDoorLoop
-from .s3_events import S3_EVENT_SCHEMA, files_to_process, s3_event_files
+from .s3_events import S3_EVENT_SCHEMA, s3_event_files
 from .sqs_source import SqsIngestLoop, make_sqs_client
 from .stream_joins import dedup_events, interval_join
 
@@ -25,7 +27,6 @@ __all__ = [
     "SqsIngestLoop",
     "make_sqs_client",
     "S3_EVENT_SCHEMA",
-    "files_to_process",
     "s3_event_files",
     "dedup_events",
     "interval_join",

@@ -108,27 +108,3 @@ def s3_event_files(
     return recs.select(
         *keep, bucket.alias("bucket"), key.alias("key"), status.alias("status")
     )
-
-
-def files_to_process(df: DataFrame, body_col: str = "body"):
-    """Decoded valid files as driver-side ``FileToProcess`` objects, plus
-    skipped-record counts — the drop-in front end for users keeping the
-    SQS queue: feed each message batch through here, hand the files to
-    ``IngestionPipeline.process_file``, log the warn counts.
-
-    The collect is bounded by the SQS receive size (≤10 messages × records
-    per event), never corpus-scale.
-    """
-    from ..pipeline import FileToProcess
-
-    decoded = s3_event_files(df, body_col).collect()
-    files = [
-        FileToProcess(bucket=r["bucket"], key=r["key"])
-        for r in decoded
-        if r["status"] == "ok"
-    ]
-    warns: dict[str, int] = {}
-    for r in decoded:
-        if r["status"] != "ok":
-            warns[r["status"]] = warns.get(r["status"], 0) + 1
-    return files, warns

@@ -8,11 +8,13 @@ message even when processing failed (at-most-once delivery).
 Spark-first rebuild: the same boto3-shaped client API behind an injectable
 seam (the ``make_mongo_writer`` client-factory pattern,
 sinks/document_sink.py) — tests drive a fake client; production passes
-``boto3.client("sqs")`` or nothing and gets one lazily. Each receive batch
-is decoded by the SAME ``s3_events.s3_event_files`` DataFrame transform the
-streaming path uses (narrow JVM ``from_json``, no Python in the parse), and
-each decoded file runs the SAME per-file batch pipeline
-(``IngestionPipeline.process_file``).
+``boto3.client("sqs")`` or nothing and gets one lazily. This module is only
+the transport: receive a batch, decode its bodies with the SAME
+``s3_events.s3_event_files`` DataFrame transform the streaming front door
+uses (narrow JVM ``from_json``, no Python in the parse), and delete or
+leave each message. The step after decode — replay guard, poison audit,
+per-file ``IngestionPipeline.process_file`` — is the routing path shared
+with both stream front doors (``routing.FileRouter``).
 
 Deliberate upgrades over the reference (SURVEY.md §3.4):
 
@@ -21,10 +23,12 @@ Deliberate upgrades over the reference (SURVEY.md §3.4):
   replay skip). A message with a failed file stays on the queue and SQS
   redelivers it after the visibility timeout — at-least-once instead of the
   reference's at-most-once (ecs_service.rs:152-165 deletes unconditionally,
-  silently dropping work on failure). The audit-log replay guard
-  (``successful_files``) makes the redelivery idempotent: succeeded
-  siblings of a failed file are skipped on the retry, so the combined
-  effect is exactly-once per file.
+  silently dropping work on failure). A file fails when the pipeline
+  raises (config, fetch, parse) AND when its sink write fails (the
+  pipeline audits that as Failed without raising): sink failures are
+  redelivered too. The audit-log replay guard (``successful_files``) makes
+  the redelivery idempotent: succeeded siblings of a failed file are
+  skipped on the retry, so the combined effect is exactly-once per file.
 - **poison messages are acked, not looped**: bodies that can never succeed
   (``invalid_json`` / ``no_records`` / ``missing_bucket_or_key``) become
   Failed AUDIT ROWS (queryable, not log text) and their message IS deleted
@@ -42,11 +46,9 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from ..errors import IngestionError
-from ..pipeline import FileToProcess, IngestionPipeline
-
-#: statuses that can never succeed on redelivery → ack after audit-logging
-_POISON = {"invalid_json", "no_records", "missing_bucket_or_key"}
+from ..pipeline import IngestionPipeline
+from . import s3_events
+from .routing import FileRouter, event_records
 
 
 def make_sqs_client(region_name: Optional[str] = None):
@@ -67,7 +69,7 @@ def make_sqs_client(region_name: Optional[str] = None):
     return boto3.client("sqs", region_name=region_name)  # pragma: no cover
 
 
-class SqsIngestLoop:
+class SqsIngestLoop(FileRouter):
     """Receive → decode → per-file ingest → delete-on-success.
 
     ``client`` is any object with the boto3 SQS surface used here:
@@ -86,16 +88,12 @@ class SqsIngestLoop:
         max_messages: int = 10,
         wait_time_seconds: int = 20,
     ) -> None:
-        self.pipeline = pipeline
+        super().__init__(pipeline)
         self.queue_url = queue_url
         self._client = client
         self._client_factory = client_factory or make_sqs_client
         self.max_messages = max_messages
         self.wait_time_seconds = wait_time_seconds
-        self.results: list = []  # IngestResult per successfully ingested file
-        self.failures: list[tuple[str, str]] = []  # (file_name, error)
-        self.warns: dict[str, int] = {}  # poison-status tallies
-        self.skipped: list[str] = []  # already-Success files seen on redelivery
         self.deleted: int = 0  # messages acked
         self.redelivered: int = 0  # messages left on the queue for retry
 
@@ -104,16 +102,6 @@ class SqsIngestLoop:
         if self._client is None:
             self._client = self._client_factory()
         return self._client
-
-    # ------------------------------------------------------------------
-    def _audit_warn(self, bucket: Optional[str], key: Optional[str], status: str) -> None:
-        """Poison record → Failed audit row (warn-as-data, not log text)."""
-        self.warns[status] = self.warns.get(status, 0) + 1
-        name = f"{bucket}/{key}" if bucket and key else "<sqs-message>"
-        log_id = self.pipeline.log.insert_log(name)
-        self.pipeline.log.finalize_log(
-            log_id, name, _utcnow_naive(), False, f"s3-event: {status}"
-        )
 
     def poll_once(self) -> int:
         """One receive → process → ack cycle; returns the number of
@@ -127,50 +115,28 @@ class SqsIngestLoop:
         if not messages:
             return 0
 
-        from .s3_events import s3_event_files
-
         bodies = self.pipeline.spark.createDataFrame(
             [(m["MessageId"], m.get("Body") or "") for m in messages],
             "msg_id string, body string",
         )
         # bounded collect: ≤ max_messages bodies × records per event —
         # queue-control metadata, never file contents
-        decoded = s3_event_files(bodies, "body", keep=("msg_id",)).collect()
+        decoded = s3_events.s3_event_files(bodies, "body", keep=("msg_id",)).collect()
         by_msg: dict[str, list] = {m["MessageId"]: [] for m in messages}
         for r in decoded:
             by_msg[r["msg_id"]].append(r)
 
-        done = self.pipeline.log.successful_files()
-        for m in messages:
-            ok_to_delete = True
-            for r in sorted(
-                by_msg[m["MessageId"]],
-                key=lambda r: (r["bucket"] or "", r["key"] or ""),
-            ):
-                if r["status"] != "ok":
-                    self._audit_warn(r["bucket"], r["key"], r["status"])
-                    continue  # poison: audited, still acked
-                file = FileToProcess(bucket=r["bucket"], key=r["key"])
-                if file.file_name in done:
-                    self.skipped.append(file.file_name)
-                    continue
-                try:
-                    res = self.pipeline.process_file(file)
-                except IngestionError as ex:
-                    self.failures.append((file.file_name, str(ex)))
-                    ok_to_delete = False  # leave message for redelivery
-                    continue
-                self.results.append(res)
-                if res.status == "Success":
-                    done.add(file.file_name)  # a same-receive duplicate skips
-            if ok_to_delete:
-                self.client.delete_message(
-                    QueueUrl=self.queue_url, ReceiptHandle=m["ReceiptHandle"]
-                )
-                self.deleted += 1
-            else:
-                self.redelivered += 1
+        self._route([(m, event_records(by_msg[m["MessageId"]])) for m in messages])
         return len(messages)
+
+    def _settle(self, message, finished: bool) -> None:
+        if finished:
+            self.client.delete_message(
+                QueueUrl=self.queue_url, ReceiptHandle=message["ReceiptHandle"]
+            )
+            self.deleted += 1
+        else:
+            self.redelivered += 1  # left on the queue for SQS to redeliver
 
     def run(self, max_polls: Optional[int] = None) -> list:
         """Poll until an empty receive (drain mode) or ``max_polls``
@@ -191,9 +157,3 @@ class SqsIngestLoop:
             if self.poll_once() == 0:
                 break
         return self.results
-
-
-def _utcnow_naive():
-    from datetime import datetime, timezone
-
-    return datetime.now(timezone.utc).replace(tzinfo=None)

@@ -11,8 +11,7 @@ from __future__ import annotations
 
 import json
 
-from data_ingestion_spark.pipeline import IngestionPipeline
-from data_ingestion_spark.streaming import files_to_process, s3_event_files
+from data_ingestion_spark.streaming import s3_event_files
 
 
 def _event(bucket: str, key: str) -> str:
@@ -89,28 +88,3 @@ def test_s3_event_keys_not_url_decoded(spark):
     df = spark.createDataFrame([(_event("b", "dir/My+File%281%29.csv"),)], ["body"])
     [r] = s3_event_files(df).filter("status = 'ok'").collect()
     assert r["key"] == "dir/My+File%281%29.csv"
-
-
-def test_files_to_process_feeds_pipeline_end_to_end(spark, tmp_path):
-    landing = tmp_path / "landing"
-    (landing / "stream-bucket" / "uploads").mkdir(parents=True)
-    (landing / "stream-bucket" / "uploads" / "a.csv").write_text(
-        "name,age\nJohn,30\nJane,25\n"
-    )
-    bodies = spark.createDataFrame(
-        [
-            (_event("stream-bucket", "uploads/a.csv"),),
-            (json.dumps({"Records": [{"s3": {}}]}),),  # skipped, counted
-        ],
-        ["body"],
-    )
-    files, warns = files_to_process(bodies)
-    assert [f.file_name for f in files] == ["stream-bucket/uploads/a.csv"]
-    assert warns == {"missing_bucket_or_key": 1}
-
-    pipe = IngestionPipeline(
-        spark, warehouse_dir=str(tmp_path / "wh"), base_dir=str(landing)
-    )
-    results = [pipe.process_file(f) for f in files]
-    assert results[0].rows == 2
-    assert pipe.sink.read_table("csv_data").count() == 2

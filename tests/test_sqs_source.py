@@ -19,7 +19,7 @@ import json
 import pytest
 
 from data_ingestion_spark.pipeline import IngestionPipeline
-from data_ingestion_spark.streaming import SqsIngestLoop
+from data_ingestion_spark.streaming import SqsFrontDoorLoop, SqsIngestLoop
 
 
 class FakeSqsClient:
@@ -175,6 +175,61 @@ def test_same_receive_duplicate_ingests_once(spark, tmp_path, landing):
         ("qbucket/uploads/a.csv", "Success")
     ]
     assert pipe.sink.read_table("csv_data").count() == 2  # landed once
+
+
+class FailingSink:
+    """Sink whose write raises; the pipeline audits that as Failed and
+    returns a Failed result instead of raising."""
+
+    def __init__(self, sink):
+        self._sink = sink
+
+    def insert_documents(self, table, df):
+        raise RuntimeError("sink unavailable")
+
+    def __getattr__(self, attr):
+        return getattr(self._sink, attr)
+
+
+@pytest.mark.parametrize("front_door", ["sqs", "stream"])
+def test_failed_sink_write_is_redelivered(spark, tmp_path, landing, front_door):
+    """A failed sink write is a failure, not a result: the SQS message
+    stays for redelivery, and the redelivery lands the rows once. The
+    stream front door is driven batch by batch, each call a redelivery."""
+    pipe = make_pipe(spark, tmp_path, landing)
+    body = s3_event(("qbucket", "uploads/a.csv"))
+    if front_door == "sqs":
+        client = FakeSqsClient([body])
+        loop = SqsIngestLoop(pipe, "https://sqs/q", client=client)
+        deliver = loop.poll_once
+    else:
+        loop = SqsFrontDoorLoop(pipe, str(tmp_path / "q"), str(tmp_path / "ck"))
+        batch = spark.createDataFrame([(body,)], "value string")
+
+        def deliver():
+            loop._process_batch(batch, batch_id=0)
+
+    real_sink = pipe.sink
+    pipe.sink = FailingSink(real_sink)
+    deliver()
+
+    assert loop.results == []
+    assert loop.failures == [("qbucket/uploads/a.csv", "sink unavailable")]
+    status = [
+        (r["file_name"], r["status"], r["message"])
+        for r in pipe.log.current_status().collect()
+    ]
+    assert status == [("qbucket/uploads/a.csv", "Failed", "sink unavailable")]
+    if front_door == "sqs":
+        assert client.deleted_handles == [] and loop.redelivered == 1
+        client.expire_visibility()
+
+    pipe.sink = real_sink
+    deliver()
+    assert [r.file_name for r in loop.results] == ["qbucket/uploads/a.csv"]
+    assert pipe.sink.read_table("csv_data").count() == 2
+    if front_door == "sqs":
+        assert client.messages == [] and loop.deleted == 1
 
 
 def test_poison_messages_audited_and_acked(spark, tmp_path, landing):
