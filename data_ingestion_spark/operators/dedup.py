@@ -519,7 +519,7 @@ def jaccard_pairs_stored(
 # --------------------------------------------------------------------------
 def _minhash_bands(
     df, id_col, text_col, k, num_hash_tables, seed, hash_fn, band_r,
-    materialize, prehash_fn, prebuilt_shingles=None,
+    prehash_fn, prebuilt_shingles=None,
 ):
     """Shared signature machinery for minhash_near_dup /
     minhash_incremental_pairs: shingle sets + (band, key) explode.
@@ -540,7 +540,7 @@ def _minhash_bands(
         )
     if prehash_fn is not None:
         base = base.withColumn("hvals", F.transform("shingles", prehash_fn))
-    if materialize and prebuilt_shingles is None:
+    if prebuilt_shingles is None:
         base = base.localCheckpoint(eager=True)
 
     def _table_hash(idx):
@@ -554,9 +554,7 @@ def _minhash_bands(
         F.array_min(F.transform(hash_src, _table_hash(i))).alias(f"mh{i}")
         for i in range(num_hash_tables)
     ]
-    sigs = base.select("id", *mh_cols)
-    if materialize:
-        sigs = sigs.localCheckpoint(eager=True)
+    sigs = base.select("id", *mh_cols).localCheckpoint(eager=True)
     n_bands = num_hash_tables // band_r
     bands = F.array(
         *[
@@ -587,7 +585,6 @@ def minhash_near_dup(
     seed: int = 42,
     hash_fn=None,
     band_r: int = 1,
-    materialize: bool = False,
     prehash_fn=None,
     prebuilt_shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -617,7 +614,7 @@ def minhash_near_dup(
 
     ``prehash_fn(shingle_col) -> Column``: optional shared base hash. When
     given, each shingle is hashed ONCE into a sibling ``hvals`` array (paid
-    once, inside the materialization when ``materialize=True``) and
+    once, inside the materialization) and
     ``hash_fn`` receives the prehashed value instead of the raw shingle.
     Without it, an expensive base hash inside ``hash_fn`` (e.g. md5) is
     re-evaluated per table — Spark does not CSE across separate
@@ -633,7 +630,7 @@ def minhash_near_dup(
     """
     base, exploded = _minhash_bands(
         df, id_col, text_col, k, num_hash_tables, seed, hash_fn, band_r,
-        materialize, prehash_fn, prebuilt_shingles=prebuilt_shingles,
+        prehash_fn, prebuilt_shingles=prebuilt_shingles,
     )
     a, b = exploded.alias("a"), exploded.alias("b")
     cand = (
@@ -667,7 +664,6 @@ def minhash_incremental_pairs(
     seed: int = 42,
     hash_fn=None,
     band_r: int = 1,
-    materialize: bool = False,
     prehash_fn=None,
     prebuilt_shingles_corpus: DataFrame | None = None,
     prebuilt_shingles_batch: DataFrame | None = None,
@@ -697,11 +693,11 @@ def minhash_incremental_pairs(
     """
     cbase, cbands = _minhash_bands(
         corpus, id_col, text_col, k, num_hash_tables, seed, hash_fn, band_r,
-        materialize, prehash_fn, prebuilt_shingles=prebuilt_shingles_corpus,
+        prehash_fn, prebuilt_shingles=prebuilt_shingles_corpus,
     )
     bbase, bbands = _minhash_bands(
         batch, id_col, text_col, k, num_hash_tables, seed, hash_fn, band_r,
-        materialize, prehash_fn, prebuilt_shingles=prebuilt_shingles_batch,
+        prehash_fn, prebuilt_shingles=prebuilt_shingles_batch,
     )
     cand = (
         cbands.alias("a")
@@ -723,48 +719,6 @@ def minhash_incremental_pairs(
         .join(sb, "batch_id")
         .select("corpus_id", "batch_id", F.round(jac, 4).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= 1.0 - jaccard_distance_threshold)
-    )
-
-
-def minhash_near_dup_ml(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-    jaccard_distance_threshold: float = 0.8,
-    seed: int = 42,
-) -> DataFrame:
-    """ml.feature.MinHashLSH variant (HashingTF → MinHashLSH →
-    approxSimilarityJoin). Kept as the library-API reference implementation;
-    ~10× slower than minhash_near_dup at equal recall because keyDistance
-    evaluates sparse vectors per candidate outside codegen."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    base = (
-        df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
-        .filter(F.size("toks") >= k)
-        .select("id", word_shingles(F.col("toks"), k).alias("shingles"))
-    )
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True
-    )
-    feats = tf.transform(base)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, jaccard_distance_threshold, distCol="jaccard_distance"
-    )
-    return (
-        pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.round(F.lit(1.0) - F.col("jaccard_distance"), 4).alias("est_jaccard"),
-        )
     )
 
 
@@ -1033,7 +987,8 @@ def connected_components(
     materializes it. At 100 TB, swap in the large-star/small-star variant
     only if diameters get pathological; near-dup graphs don't.
 
-    Returns (id, component) — component = min node id reachable.
+    Returns (id, component) — component = min node id reachable. Raises
+    RuntimeError when ``max_iter`` rounds end without a fixpoint.
     """
     # Materialize the (possibly expensive) upstream pair pipeline ONCE,
     # then mirror the cheap checkpointed edge list — a union of two selects
@@ -1074,6 +1029,14 @@ def connected_components(
         labels = stepped.select("id", "comp")
         if changed == 0:
             break
+    else:
+        # Labels that still moved in the last round are not components yet;
+        # returning them would silently split clusters.
+        raise RuntimeError(
+            f"connected_components: labels still changing after {max_iter} "
+            "rounds; raise max_iter (rounds needed grow with the graph "
+            "diameter)"
+        )
     return labels
 
 

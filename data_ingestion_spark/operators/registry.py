@@ -124,7 +124,6 @@ def dedup_minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         jaccard_distance_threshold=0.7,
         hash_fn=portable,
         band_r=2,
-        materialize=True,
         prehash_fn=prehash,
         prebuilt_shingles=base.select("id", F.col("sset").alias("shingles")),
     ).orderBy("id_a", "id_b")
@@ -215,7 +214,6 @@ def dedup_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         jaccard_distance_threshold=0.7,
         hash_fn=portable,
         band_r=2,
-        materialize=True,
         prehash_fn=prehash,
         prebuilt_shingles_corpus=stored.filter(F.col("id") % 2 == 0),
         prebuilt_shingles_batch=stored.filter(F.col("id") % 2 == 1),
@@ -2915,7 +2913,7 @@ def dedup_nightly_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     kwargs = dict(
         k=3, num_hash_tables=8, seed=42, hash_fn=portable, band_r=2,
-        materialize=True, prehash_fn=prehash,
+        prehash_fn=prehash,
     )
     cbase, cbands = dedup._minhash_bands(
         None, "doc_id", "text",
@@ -3200,7 +3198,7 @@ def minhash_band_recall_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     found = dedup.minhash_near_dup(
         None, id_col="doc_id", text_col="text", k=3,
         jaccard_distance_threshold=0.7, hash_fn=portable, band_r=2,
-        materialize=True, prehash_fn=prehash,
+        prehash_fn=prehash,
         prebuilt_shingles=base.select("id", F.col("sset").alias("shingles")),
     ).select("id_a", "id_b")
     truth = truth.localCheckpoint(eager=False)  # feeds n_true AND the hit join
@@ -3872,7 +3870,7 @@ def minhash_band_precision_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base, exploded = dedup._minhash_bands(
         None, "doc_id", "text", k=3, num_hash_tables=8, seed=42,
-        hash_fn=portable, band_r=2, materialize=True, prehash_fn=prehash,
+        hash_fn=portable, band_r=2, prehash_fn=prehash,
         prebuilt_shingles=sbase.select("id", F.col("sset").alias("shingles")),
     )
     a, b = exploded.alias("a"), exploded.alias("b")

@@ -2560,10 +2560,9 @@ def pit_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import temporal
 
     ev = load_table(spark, sf_dir, "events")
-    # r15 (duplicate-scan audit tail): v1 and v2 each replayed the events
-    # scan + user_id distinct — 3 events scans in one plan → 1 behind an
-    # eager cut of the distinct user list. A/B + plan pair in
-    # OPTIMIZATION_r15.md.
+    # v1 and v2 would each replay the events scan + user_id distinct (3
+    # events scans in one plan); an eager cut of the distinct user list
+    # runs it once.
     users = ev.select(F.col("user_id")).distinct().localCheckpoint(eager=True)
     boundary = F.lit("2024-01-15 00:00:00").cast("timestamp")
     v1 = users.select(
@@ -7296,11 +7295,10 @@ def rfm_segments_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "cents",
         )
-        # r15 (duplicate-scan audit tail): the quintile-boundary agg and
-        # the scoring pass each replayed the per-customer agg (+ its ref
-        # scan) — 4 orders scans in one plan. One eager cut of the
-        # |customers|-row 4-column reduction runs the groupBy once.
-        # A/B + plan pair in OPTIMIZATION_r15.md.
+        # The quintile-boundary agg and the scoring pass would each replay
+        # the per-customer agg (+ its ref scan) — 4 orders scans in one
+        # plan. One eager cut of the |customers|-row 4-column reduction
+        # runs the groupBy once.
         .localCheckpoint(eager=True)
     )
     probs = [0.2, 0.4, 0.6, 0.8]

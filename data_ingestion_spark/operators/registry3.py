@@ -590,12 +590,11 @@ def t_closeness_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     per = docs.select("lang", "source", F.expr("n_chars div 200").alias("s"))
-    # r15 (duplicate-scan audit tail): cls, glob, tot, and the grid's
-    # left join each replayed the corpus scan + agg — 4 documents scans
-    # in one plan. The finest-grain (QI, bucket) count agg runs once
-    # behind an eager cut; class/global/total aggregates derive from it
-    # (Σ counts ≡ counts — value-identical). A/B + plan pair in
-    # OPTIMIZATION_r15.md.
+    # cls, glob, tot, and the grid's left join would each replay the
+    # corpus scan + agg — 4 documents scans in one plan. The finest-grain
+    # (QI, bucket) count agg runs once behind an eager cut;
+    # class/global/total aggregates derive from it (Σ counts ≡ counts —
+    # value-identical).
     cb = per.groupBy("lang", "source", "s").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     ).localCheckpoint(eager=True)
@@ -766,12 +765,12 @@ def dedup_impact_report_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e6-scaled char shares run in DECIMAL(38,0)/HUGEINT (1e6·chars
     clears 2^63 past ~9e12 chars — one 10 TB source)."""
     docs = load_table(spark, sf_dir, "documents")
-    # r15 (duplicate-scan audit tail): the final plan held SIX documents
-    # scans, each recomputing md5 over the full text (winners ×2, before,
+    # Without a cut the final plan holds six documents scans, each
+    # recomputing md5 over the full text (winners ×2, before,
     # after→winners ×2, totals via both). One eager cut of the narrow
     # (id, source, n_chars, fp) frame — text never materializes — runs
     # the hash pass once; every downstream agg reads the 16-byte
-    # fingerprints. Same-session A/B + plan pair in OPTIMIZATION_r15.md.
+    # fingerprints.
     fp = docs.select(
         "doc_id", "source", "n_chars", F.md5(F.col("text")).alias("fp")
     ).localCheckpoint(eager=True)
@@ -2042,12 +2041,11 @@ def conformal_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import inference
 
     docs = load_table(spark, sf_dir, "documents")
-    # r15 (duplicate-scan audit tail): the calibration count, the
-    # threshold cumulative, and the evaluation agg each replayed the
-    # classifier pass (tokenize + logistic) — 4 full-text scans in one
-    # plan. One eager cut of the 16-byte-per-row (doc_id, nc) frame runs
-    # the classifier once; everything downstream is integer arithmetic
-    # on the cut blocks. A/B + plan pair in OPTIMIZATION_r15.md.
+    # The calibration count, the threshold cumulative, and the evaluation
+    # agg would each replay the classifier pass (tokenize + logistic) — 4
+    # full-text scans in one plan. One eager cut of the 16-byte-per-row
+    # (doc_id, nc) frame runs the classifier once; everything downstream
+    # is integer arithmetic on the cut blocks.
     scored = inference.classifier_scores(docs, "doc_id", "text").select(
         F.col("id").alias("doc_id"),
         (F.lit(1000000) - F.col("score_micro")).cast("long").alias("nc"),
@@ -4318,10 +4316,9 @@ def forecast_mase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     daily = ev.groupBy(F.col("event_type"), day.alias("d")).agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    # r15 (duplicate-scan audit tail): lag7/lag1 and both join left sides
-    # each replayed the events scan + (type, day) agg — 4 scans in one
-    # plan → 1 behind an eager cut of the |types|·|days|-row daily table.
-    # A/B + plan pair in OPTIMIZATION_r15.md.
+    # lag7/lag1 and both join left sides would each replay the events
+    # scan + (type, day) agg — 4 scans in one plan → 1 behind an eager
+    # cut of the |types|·|days|-row daily table.
     ).localCheckpoint(eager=True)
     lag7 = daily.select(
         "event_type", (F.col("d") + 7).alias("d"), F.col("c").alias("c7")
@@ -4479,13 +4476,12 @@ def wasserstein_pairs_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     per = docs.select("source", F.expr("n_chars div 200").alias("b"))
-    # r15 (duplicate-scan audit tail): totals, buckets, nb, and both cum
-    # sides each replayed the corpus scan + agg — SEVEN documents scans in
-    # one plan. The finest-grain (source, bucket) count agg is computed
-    # once behind an eager cut, and every coarser aggregate derives from
-    # it (Σ counts per source ≡ per-source count; distinct buckets of the
-    # count table ≡ distinct buckets of the corpus — value-identical).
-    # A/B + plan pair in OPTIMIZATION_r15.md.
+    # totals, buckets, nb, and both cum sides would each replay the corpus
+    # scan + agg — seven documents scans in one plan. The finest-grain
+    # (source, bucket) count agg is computed once behind an eager cut, and
+    # every coarser aggregate derives from it (Σ counts per source ≡
+    # per-source count; distinct buckets of the count table ≡ distinct
+    # buckets of the corpus — value-identical).
     counts = per.groupBy("source", "b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     ).localCheckpoint(eager=True)
@@ -4904,10 +4900,9 @@ def rolling_wau_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.datediff(
         F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
     ).cast("long")
-    # r15 (duplicate-scan audit tail): dau, the 7-day explode, and the
-    # bounds agg each replayed the events scan + (user, day) distinct —
-    # 3 scans+distincts in one plan → 1 behind an eager cut of the
-    # distinct (user, day) table. A/B + plan pair in OPTIMIZATION_r15.md.
+    # dau, the 7-day explode, and the bounds agg would each replay the
+    # events scan + (user, day) distinct — 3 scans+distincts in one plan
+    # → 1 behind an eager cut of the distinct (user, day) table.
     active = ev.select("user_id", day.alias("d")).distinct().localCheckpoint(
         eager=True
     )
@@ -4990,13 +4985,12 @@ def mad_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents"
         ),
     )
-    # r15 (duplicate-scan audit tail): the final plan replayed the events
-    # scan + exact-percentile buffer SIX times (med and mad are broadcast
-    # into every consumer subtree, and each broadcast build replayed its
-    # whole upstream). Eager cuts of the two |event_type|-row frames pin
-    # each percentile pass to run once: 6 events scans → 3 (the three
+    # Without cuts the final plan replays the events scan +
+    # exact-percentile buffer six times (med and mad are broadcast into
+    # every consumer subtree, and each broadcast build replays its whole
+    # upstream). Eager cuts of the two |event_type|-row frames pin each
+    # percentile pass to run once: 6 events scans → 3 (the three
     # genuinely distinct passes — median, MAD, outlier count).
-    # A/B + plan pair in OPTIMIZATION_r15.md.
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(cents, 0.5)").alias("med_c")
     ).localCheckpoint(eager=True)

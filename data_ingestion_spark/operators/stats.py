@@ -166,14 +166,13 @@ def psi_by_group(
     bucket = F.lit(0)
     for k in range(max_pow):
         bucket = bucket + (v >= F.lit(2 ** k)).cast("int")
-    # r15 (duplicate-scan audit tail): base, the grp universe, grp_n, and
-    # the dense left join each replayed the corpus scan + bucket agg, and
-    # df.count() was a separate driver action over a FIFTH scan. One eager
-    # cut of the ≤|groups|·(max_pow+1)-row count table feeds everything,
-    # and the total folds into the same plan as a broadcast scalar
+    # base, the grp universe, grp_n, and the dense left join would each
+    # replay the corpus scan + bucket agg, and a df.count() would be a
+    # separate driver action over a fifth scan. One eager cut of the
+    # ≤|groups|·(max_pow+1)-row count table feeds everything, and the
+    # total folds into the same plan as a broadcast scalar
     # (Σ counts ≡ df.count(); (n_total + n_bins) cast to double is the
-    # bit-identical divisor float(n_total + n_bins) was).
-    # A/B in OPTIMIZATION_r15.md.
+    # bit-identical divisor float(n_total + n_bins)).
     counts = (
         df.select(F.col(group_col).alias("grp"), bucket.alias("bkt"))
         .groupBy("grp", "bkt")
@@ -295,11 +294,10 @@ def ks_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    # r15 (duplicate-scan audit tail): vals, groups, the grid's left join,
-    # and n_all each replayed the corpus scan + (group, value) agg — 4-5
-    # scans in one plan → 1 behind an eager cut of the
-    # |groups|·|distinct values|-row count table (metadata-scale by the
-    # docstring's own grid argument). A/B in OPTIMIZATION_r15.md.
+    # vals, groups, the grid's left join, and n_all would each replay the
+    # corpus scan + (group, value) agg — 4-5 scans in one plan → 1 behind
+    # an eager cut of the |groups|·|distinct values|-row count table
+    # (metadata-scale by the docstring's own grid argument).
     gv = df.groupBy(F.col(group_col).alias("grp"), F.col(value_col).alias("v")).agg(
         F.count(F.lit(1)).alias("c")
     ).localCheckpoint(eager=True)
@@ -368,10 +366,9 @@ def chi_square_independence(
     |levels_a| × |levels_b| contingency grid. Returns one row:
     (n_rows, n_cells, dof, chi2_micro).
     """
-    # r15 (duplicate-scan audit tail): ra, cb, n, and the grid's left join
-    # each replayed the corpus scan + contingency agg — 4 scans in one
-    # plan → 1 behind an eager cut of the |levels_a|·|levels_b|-row
-    # table. A/B in OPTIMIZATION_r15.md.
+    # ra, cb, n, and the grid's left join would each replay the corpus
+    # scan + contingency agg — 4 scans in one plan → 1 behind an eager cut
+    # of the |levels_a|·|levels_b|-row table.
     ab = df.groupBy(F.col(a_col).alias("a"), F.col(b_col).alias("b")).agg(
         F.count(F.lit(1)).alias("c")
     ).localCheckpoint(eager=True)

@@ -17,8 +17,7 @@ Cross-cutting semantics preserved (SURVEY.md §3.4):
 
 Deliberate upgrades (each flagged):
 - failures in steps 1-4 ARE logged (the reference only logs insert-phase
-  failures — SURVEY.md §2.3 L3); pass ``compat_reference_logs=True`` to
-  replicate the reference's no-log-row-on-early-failure gap
+  failures, so an early failure leaves no log row — SURVEY.md §2.3 L3)
 - CSV delimiter/has_headers honored (reference ignores them, §2.2 P4)
 """
 
@@ -77,7 +76,6 @@ class IngestionPipeline:
         warehouse_dir: str,
         rules: Optional[RuleSet] = None,
         base_dir: Optional[str] = None,
-        compat_reference_logs: bool = False,
     ) -> None:
         self.spark = spark
         self.rules = rules if rules is not None else DEFAULT_RULES
@@ -85,7 +83,6 @@ class IngestionPipeline:
         self.base_dir = base_dir
         self.sink = ParquetSink(spark, warehouse_dir)
         self.log = IngestionLogWriter(spark, warehouse_dir)
-        self.compat_reference_logs = compat_reference_logs
 
     def path_for(self, file: FileToProcess) -> str:
         if self.base_dir is not None:
@@ -115,10 +112,9 @@ class IngestionPipeline:
                 # normalize so failures are loggable and typed
                 raise ParseError(f"Failed to parse {file.file_name}: {ex}") from ex
         except IngestionError as ex:
-            if not self.compat_reference_logs:
-                # upgrade: early failures get a log row too (vs §2.3 L3 gap)
-                log_id = self.log.insert_log(file.file_name)
-                self.log.finalize_log(log_id, file.file_name, start, False, str(ex))
+            # upgrade: early failures get a log row too (vs §2.3 L3 gap)
+            log_id = self.log.insert_log(file.file_name)
+            self.log.finalize_log(log_id, file.file_name, start, False, str(ex))
             raise
 
         # Step 5: enrich + log + insert (ingestion_service.rs:79-116)

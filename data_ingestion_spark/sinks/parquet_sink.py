@@ -1,8 +1,8 @@
 """Columnar table sink — the rebuild's canonical target-table store.
 
 Replaces the reference's Mongo ``insert_many`` (data_repo.rs:53-59) with an
-append to a columnar table (parquet by default; ORC as the alternate —
-both are native Spark formats with pushdown + pruning). Schema evolution
+append to a parquet table (a native Spark format with pushdown + pruning).
+Schema evolution
 across heterogeneous files of the same target table (Mongo tolerated
 per-doc schemas natively) is handled with union-by-name + nulls
 (SURVEY.md §1.3): parquet readers merge schemas, and appends with
@@ -16,18 +16,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_FORMATS = ("parquet", "orc")
-
-
 class ParquetSink:
-    def __init__(
-        self, spark: SparkSession, warehouse_dir: str, fmt: str = "parquet"
-    ) -> None:
-        if fmt not in _FORMATS:
-            raise ValueError(f"Unsupported columnar format: {fmt} (use {_FORMATS})")
+    def __init__(self, spark: SparkSession, warehouse_dir: str) -> None:
         self.spark = spark
         self.warehouse_dir = warehouse_dir
-        self.fmt = fmt
 
     def table_path(self, target_table: str) -> str:
         return os.path.join(self.warehouse_dir, target_table)
@@ -41,14 +33,12 @@ class ParquetSink:
         n = df.count()
         if n == 0:
             return 0
-        df.write.mode("append").format(self.fmt).save(self.table_path(target_table))
+        df.write.mode("append").parquet(self.table_path(target_table))
         return n
 
     def read_table(self, target_table: str) -> DataFrame:
-        return (
-            self.spark.read.option("mergeSchema", True)
-            .format(self.fmt)
-            .load(self.table_path(target_table))
+        return self.spark.read.option("mergeSchema", True).parquet(
+            self.table_path(target_table)
         )
 
     def table_exists(self, target_table: str) -> bool:

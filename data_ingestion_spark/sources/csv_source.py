@@ -17,8 +17,8 @@ Reference semantics reproduced exactly (SURVEY.md §2.2 P1-P4):
 Spark design:
 - Spark's CSV reader sizes rows to the first record and silently drops extra
   fields — so raggedness is handled by reading with an explicit schema WIDER
-  than the header list (``ragged_extra_columns`` slack slots) and dropping
-  the all-null tail afterwards.
+  than the header list (``RAGGED_EXTRA`` slack slots) and dropping the
+  all-null tail afterwards.
 - Spark's univocity parser nulls EVERY empty unquoted field before the
   ``nullValue`` option applies, so present-but-empty vs missing-trailing is
   reconstructed positionally: CSV fields are contiguous, so a null at
@@ -43,30 +43,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import ParseError
+from .listing import list_files
 
 #: Sentinel that never appears in real data: with this as nullValue, empty
 #: CSV fields stay "" and only absent trailing fields become NULL.
 _NULL_SENTINEL = "\u0000"
 
-DEFAULT_RAGGED_EXTRA = 16
-
-
-def _resolve_header_file(spark: SparkSession, path: str) -> str:
-    """For a directory input, the header is read from the lexicographically
-    first file (deterministic — round 1 let the text reader pick an
-    arbitrary one). Driver-side Hadoop FS listing: metadata only, no job."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath) or fs.getFileStatus(hpath).isFile():
-        return path
-    files = []
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        files.append(str(it.next().getPath()))
-    if not files:
-        raise ParseError(f"Empty CSV directory: {path}")
-    return min(files)
+#: Slack columns read past the header width to catch ragged rows' extras.
+RAGGED_EXTRA = 16
 
 
 def _read_header_line(spark: SparkSession, path: str, delimiter: str) -> list[str]:
@@ -76,7 +60,10 @@ def _read_header_line(spark: SparkSession, path: str, delimiter: str) -> list[st
     newline is not reassembled by the LIMIT-1 line read — headers must be
     single-line (true of every reference fixture; the reference's csv crate
     shares the assumption for its header row)."""
-    first = spark.read.text(_resolve_header_file(spark, path)).limit(1).collect()
+    # a directory's header comes from its lexicographically first file
+    # (deterministic — the text reader alone would pick an arbitrary one)
+    files = list_files(spark, path)
+    first = spark.read.text(min(files)[0] if files else path).limit(1).collect()
     if not first:
         raise ParseError(f"Empty CSV file: {path}")
     reader = _csv.reader(io.StringIO(first[0]["value"]), delimiter=delimiter)
@@ -106,8 +93,7 @@ def read_csv(
             headers = [f"column_{i}" for i in range(len(headers))]
             has_header_row = False
 
-    extra = int(cfg.get("ragged_extra_columns", DEFAULT_RAGGED_EXTRA))
-    width = len(headers) + extra
+    width = len(headers) + RAGGED_EXTRA
     schema = T.StructType(
         [T.StructField(f"_f{i}", T.StringType(), True) for i in range(width)]
     )
@@ -126,13 +112,13 @@ def read_csv(
 
     # Restore present-but-empty fields: null at position i with a non-null
     # anywhere after it was an empty field, not a missing one. Pure codegen
-    # expressions — no UDF. (greatest() needs ≥2 args — width 1 has no
-    # later position, so _last is just the 0/-1 presence marker.)
-    pos_marks = [
-        F.when(F.col(f"_f{i}").isNotNull(), F.lit(i)).otherwise(F.lit(-1))
-        for i in range(width)
-    ]
-    last_idx = F.greatest(*pos_marks) if width > 1 else pos_marks[0]
+    # expressions — no UDF.
+    last_idx = F.greatest(
+        *[
+            F.when(F.col(f"_f{i}").isNotNull(), F.lit(i)).otherwise(F.lit(-1))
+            for i in range(width)
+        ]
+    )
     df = df.withColumn("_last", last_idx).select(
         *[
             F.when(
@@ -150,16 +136,11 @@ def read_csv(
     # one file scan total. The cache handle rides on the returned DataFrame
     # (`_csv_cache`); IngestionPipeline unpersists it after the sink write.
     extra_cols = [f"_f{i}" for i in range(len(headers), width)]
-    cached = None
-    if extra_cols:
-        cached = df.persist()
-        counts = cached.agg(
-            *[F.count(F.col(c)).alias(c) for c in extra_cols]
-        ).collect()[0]
-        live_extras = [c for c in extra_cols if counts[c] > 0]
-        df = cached
-    else:
-        live_extras = []
+    cached = df.persist()
+    counts = cached.agg(
+        *[F.count(F.col(c)).alias(c) for c in extra_cols]
+    ).collect()[0]
+    live_extras = [c for c in extra_cols if counts[c] > 0]
 
     select: list = []
     for i, name in enumerate(headers):
@@ -168,7 +149,6 @@ def read_csv(
         idx = int(c[2:])
         # reference keys overflow fields column_{overall 0-based index}
         select.append(F.col(c).alias(f"column_{idx}"))
-    out = df.select(*select)
-    if cached is not None:
-        out._csv_cache = cached  # type: ignore[attr-defined]
+    out = cached.select(*select)
+    out._csv_cache = cached  # type: ignore[attr-defined]
     return out

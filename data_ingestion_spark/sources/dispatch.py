@@ -5,6 +5,7 @@ src/infrastructure/parser_adapter.rs:32-58).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,11 +36,7 @@ PARSERS: dict[str, Callable[..., DataFrame]] = {
 }
 
 
-def register_parser(
-    file_type: str,
-    parser: Callable[..., DataFrame],
-    overwrite: bool = False,
-) -> None:
+def register_parser(file_type: str, parser: Callable[..., DataFrame]) -> None:
     """Plug a new format parser into the dispatch registry — the rebuild's
     user-extensible surface for the reference's ``DataParser`` trait
     (ports.rs:11-14): any callable ``(spark, path, parser_config) ->
@@ -50,17 +47,32 @@ def register_parser(
     Python UDTF / ``mapInPandas`` parser drops in with the same signature —
     that is the sanctioned slow path, per the XML/Excel readers.
 
-    ``overwrite=False`` refuses to shadow a built-in so a plugin typo can't
-    silently replace the CSV parser.
+    A registered type is never shadowed, so a plugin typo can't silently
+    replace the CSV parser; ``parser_registered`` swaps one in for a scope.
     """
     ft = file_type.lower().lstrip(".")
     if not ft:
         raise ValueError("file_type must be a non-empty extension")
-    if ft in PARSERS and not overwrite:
-        raise ValueError(
-            f"parser for {ft!r} already registered (pass overwrite=True)"
-        )
+    if ft in PARSERS:
+        raise ValueError(f"parser for {ft!r} already registered")
     PARSERS[ft] = parser
+
+
+@contextmanager
+def parser_registered(file_type: str, parser: Callable[..., DataFrame]):
+    """Scoped registration: ``parser`` handles ``file_type`` inside the
+    block and the previous entry (or none) is restored on exit, so opt-in
+    formats (PDF, HTML) parse without changing the default dispatch, which
+    rejects them like the reference."""
+    prev = PARSERS.get(file_type)
+    PARSERS[file_type] = parser
+    try:
+        yield
+    finally:
+        if prev is None:
+            PARSERS.pop(file_type, None)
+        else:
+            PARSERS[file_type] = prev
 
 
 #: Compression suffixes Spark's text-based readers decompress transparently

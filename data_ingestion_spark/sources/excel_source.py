@@ -116,7 +116,6 @@ def read_excel(
     spark: SparkSession,
     path: str,
     parser_config: Optional[dict[str, Any]] = None,
-    include_path: bool = False,
 ) -> DataFrame:
     """Parse xlsx workbook(s) at ``path`` into one all-string DataFrame.
 
@@ -128,7 +127,7 @@ def read_excel(
     # the same documented upgrade as CSV's delimiter (SURVEY.md §2.2 P4).
     sheet_index = int(cfg.get("sheet_index", 0))
 
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
+    binary = spark.read.format("binaryFile").load(path).select("content")
     first = binary.limit(1).collect()
     if not first:
         raise ParseError(f"No Excel files at: {path}")
@@ -138,23 +137,16 @@ def read_excel(
     # occurrence order, unique names only.
     headers = list(dict.fromkeys(headers))
     if not headers:
-        schema = "path string" if include_path else "__empty string"
-        empty = spark.createDataFrame([], schema)
-        return empty if include_path else empty.drop("__empty")
+        return spark.createDataFrame([], "__empty string").drop("__empty")
 
-    out_fields = (["path string"] if include_path else []) + [
-        f"`{h}` string" for h in headers
-    ]
-    out_schema = ", ".join(out_fields)
+    out_schema = ", ".join(f"`{h}` string" for h in headers)
 
     def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             data: dict[str, list[str]] = {h: [] for h in headers}
-            paths: list[str] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
+            for content in pdf["content"]:
                 hdrs, rows = rows_to_documents(read_xlsx_rows(bytes(content), sheet_index))
                 for row in rows:
-                    paths.append(p)
                     # last-wins per row on duplicate headers (reference
                     # map-insert semantics), then exactly ONE append per
                     # global header — missing cols → ""
@@ -163,9 +155,6 @@ def read_excel(
                         rowmap[h] = v
                     for h in headers:
                         data[h].append(rowmap.get(h, ""))
-            out = pd.DataFrame(data)
-            if include_path:
-                out.insert(0, "path", paths)
-            yield out
+            yield pd.DataFrame(data)
 
     return binary.mapInPandas(_parse, schema=out_schema)

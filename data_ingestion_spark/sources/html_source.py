@@ -3,8 +3,9 @@ LLM-corpus pipeline needs in front of every text operator.
 
 Reference parity note: like PDF, HTML is outside the reference's shipped
 parser menu (src/infrastructure/parser_adapter.rs:39-57 stops at xlsx), so
-this is an opt-in plug-in registration (S5 API, sources/dispatch.py) —
-the default pipeline keeps rejecting ``.html`` exactly like the reference.
+callers opt in for a scope with ``dispatch.parser_registered("html",
+read_html)`` (S5 API, sources/dispatch.py) — the default pipeline keeps
+rejecting ``.html`` exactly like the reference.
 
 Extraction tier (pure stdlib ``html.parser``, no lxml dependency):
 
@@ -34,13 +35,10 @@ seam; a full readability library injects via the ``extractor`` argument.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from html.parser import HTMLParser
 from typing import Any, Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..errors import ParseError
 
 BLOCK_TAGS = frozenset(
     "p div h1 h2 h3 h4 h5 h6 li td th blockquote pre title article section "
@@ -167,34 +165,3 @@ def read_html(
             )
 
     return binary.mapInPandas(_parse, schema=HTML_SCHEMA)
-
-
-def _html_parser(spark: SparkSession, path: str, parser_config=None) -> DataFrame:
-    try:
-        return read_html(spark, path, parser_config)
-    except ValueError as ex:
-        raise ParseError(f"Failed to parse HTML: {ex}") from ex
-
-
-def register_html_parser(overwrite: bool = False) -> None:
-    """Opt into HTML ingestion (S5 plug-in API). NOT called at import time
-    — the default pipeline rejects HTML exactly like the reference."""
-    from .dispatch import register_parser
-
-    register_parser("html", _html_parser, overwrite=overwrite)
-
-
-@contextmanager
-def html_parser_registered():
-    """Scoped registration (register on enter, restore on exit)."""
-    from .dispatch import PARSERS
-
-    prev = PARSERS.get("html")
-    PARSERS["html"] = _html_parser
-    try:
-        yield
-    finally:
-        if prev is None:
-            PARSERS.pop("html", None)
-        else:
-            PARSERS["html"] = prev

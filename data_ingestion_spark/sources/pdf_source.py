@@ -6,10 +6,10 @@ formats to support (instructions.md:8), but the shipped parser menu stops
 at xlsx and rejects it (src/infrastructure/parser_adapter.rs:54-57), and
 its seed rules route nothing to a pdf table (migration.js:5-51). This
 module EXCEEDS that fidelity while preserving the out-of-the-box behavior:
-the extractor is NOT in the default dispatch registry — callers opt in via
-``register_pdf_parser()`` / the ``pdf_parser_registered()`` context
-manager (the S5 plug-in API, sources/dispatch.py), so an unconfigured
-pipeline still rejects ``.pdf`` exactly like the reference.
+the extractor is NOT in the default dispatch registry — callers opt in for
+a scope with ``dispatch.parser_registered("pdf", read_pdf)`` (the S5
+plug-in API, sources/dispatch.py), so an unconfigured pipeline still
+rejects ``.pdf`` exactly like the reference.
 
 Extraction tier (pure stdlib: zlib + re, public ISO 32000 / PDF 1.4 spec):
 
@@ -40,12 +40,9 @@ from __future__ import annotations
 
 import re
 import zlib
-from contextlib import contextmanager
 from typing import Any, Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..errors import ParseError
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.DOTALL)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)endstream", re.DOTALL)
@@ -384,7 +381,7 @@ def pdf_encode_simple(pages: list[list[str]]) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Spark reader + opt-in dispatch registration
+# Spark reader
 # ---------------------------------------------------------------------------
 def read_pdf(
     spark: SparkSession,
@@ -419,37 +416,3 @@ def read_pdf(
             )
 
     return binary.mapInPandas(_parse, schema=PDF_SCHEMA)
-
-
-def _pdf_parser(spark: SparkSession, path: str, parser_config=None) -> DataFrame:
-    try:
-        return read_pdf(spark, path, parser_config)
-    except ValueError as ex:
-        raise ParseError(f"Failed to parse PDF: {ex}") from ex
-
-
-def register_pdf_parser(overwrite: bool = False) -> None:
-    """Opt into PDF ingestion: plugs ``read_pdf`` into the dispatch
-    registry under ``pdf`` (S5 plug-in API). NOT called at import time —
-    the default pipeline rejects PDFs exactly like the reference."""
-    from .dispatch import register_parser
-
-    register_parser("pdf", _pdf_parser, overwrite=overwrite)
-
-
-@contextmanager
-def pdf_parser_registered():
-    """Scoped registration (register on enter, restore on exit) so callers
-    — tests, the driver-gated ingest_pdf_docs query — can use PDF dispatch
-    without changing the process-global default behavior."""
-    from .dispatch import PARSERS
-
-    prev = PARSERS.get("pdf")
-    PARSERS["pdf"] = _pdf_parser
-    try:
-        yield
-    finally:
-        if prev is None:
-            PARSERS.pop("pdf", None)
-        else:
-            PARSERS["pdf"] = prev

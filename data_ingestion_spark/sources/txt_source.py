@@ -5,17 +5,18 @@ bytes); one document per line, shaped ``{"line_number": <1-based int>,
 "content": <line>}`` (txt_parser.rs:18-23).
 
 Spark design: deterministic line numbers need a total order per file, which
-``spark.read.text`` doesn't guarantee across splits. Two modes, picked
-automatically by file size (``mode="auto"``, the default):
+``spark.read.text`` doesn't guarantee across splits. The reader is picked by
+the largest file's size:
 
-- ``wholefile`` — each file read with ``wholetext`` (one row per file,
-  mirroring the reference's whole-buffer parse, s3_adapter.rs:39-46) and
-  split with ``posexplode``: exact 0-based positions JVM-side, no UDF, no
-  shuffle. Right answer for the reference's many-small-files ingest shape;
-  a multi-GB file would become one JVM string (the same 512 MB-class
-  ceiling the reference had), hence the auto-switch.
-- ``distributed`` — splittable text reader + per-file ordering key: scales
-  to arbitrarily large single files at the cost of one window shuffle.
+- up to ``WHOLEFILE_MAX_BYTES`` — each file read with ``wholetext`` (one row
+  per file, mirroring the reference's whole-buffer parse,
+  s3_adapter.rs:39-46) and split with ``posexplode``: exact 0-based
+  positions JVM-side, no UDF, no shuffle. Right answer for the reference's
+  many-small-files ingest shape; a multi-GB file would become one JVM
+  string (the same 512 MB-class ceiling the reference had), hence the
+  switch.
+- above it — splittable text reader + per-file ordering key: scales to
+  arbitrarily large single files at the cost of one window shuffle.
 
 The trailing-newline trim (the reference's ``lines()`` iterator never emits
 a final empty line) is computed PER FILE as a narrow array expression before
@@ -31,27 +32,11 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-#: Above this single-file size, auto mode switches to the distributed reader
-#: (whole-file rows stop being cheap around the split size anyway).
-DEFAULT_WHOLEFILE_MAX_BYTES = 128 * 1024 * 1024
+from .listing import list_files
 
-
-def _max_file_bytes(spark: SparkSession, path: str) -> int:
-    """Largest single file under ``path`` via a driver-side Hadoop FS
-    listing — metadata only, no Spark job, works for any supported
-    filesystem (file://, s3a://, hdfs://)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return 0
-    biggest = 0
-    it = fs.listFiles(hpath, True)  # recursive; plain files only
-    while it.hasNext():
-        status = it.next()
-        if status.getLen() > biggest:
-            biggest = status.getLen()
-    return biggest
+#: Above this single-file size the distributed reader is used (whole-file
+#: rows stop being cheap around the split size anyway).
+WHOLEFILE_MAX_BYTES = 128 * 1024 * 1024
 
 
 def read_txt(
@@ -60,13 +45,8 @@ def read_txt(
     parser_config: Optional[dict[str, Any]] = None,
 ) -> DataFrame:
     """Parse text file(s) into (line_number bigint, content string)."""
-    cfg = parser_config or {}
-    mode = cfg.get("mode", "auto")
-    if mode == "auto":
-        limit = int(cfg.get("wholefile_max_bytes", DEFAULT_WHOLEFILE_MAX_BYTES))
-        mode = "distributed" if _max_file_bytes(spark, path) > limit else "wholefile"
-
-    if mode == "distributed":
+    biggest = max((n for _, n in list_files(spark, path)), default=0)
+    if biggest > WHOLEFILE_MAX_BYTES:
         # Scalable path: per-file ordering key from a monotonic id within
         # input order. Spark's text source preserves offset order within a
         # split, and splits of one file keep offset order across partition

@@ -9,7 +9,7 @@ Reference semantics reproduced exactly (SURVEY.md §2.2 P7):
 - zero records in the file is a parse error (xml_parser.rs:66-69)
 
 Spark design: no external spark-xml jar — files are read with the binaryFile
-source (content + path metadata, lazily loaded per file) and parsed by an
+source (file content, lazily loaded per file) and parsed by an
 Arrow-batched ``mapInPandas`` using stdlib ``xml.etree.ElementTree.iterparse``
 (streaming, no DOM — same event-based shape as the reference's quick-xml
 scan). Each file parses independently on an executor, so a directory of XML
@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..errors import ParseError
 
-_OUT_SCHEMA = "path string, doc map<string,string>"
+_OUT_SCHEMA = "doc map<string,string>"
 
 
 def _strip_ns(tag: str) -> str:
@@ -71,30 +71,21 @@ def parse_xml_records(data: bytes) -> list[dict[str, str]]:
 
 def _parse_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
-        out_paths: list[str] = []
-        out_docs: list[dict[str, str]] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            for doc in parse_xml_records(bytes(content)):
-                out_paths.append(path)
-                out_docs.append(doc)
+        out_docs = [
+            doc for content in pdf["content"] for doc in parse_xml_records(bytes(content))
+        ]
         # explicit object dtype: an empty partition must not infer float64
         # (Arrow can't convert that to map<string,string>)
-        yield pd.DataFrame(
-            {
-                "path": pd.Series(out_paths, dtype="object"),
-                "doc": pd.Series(out_docs, dtype="object"),
-            }
-        )
+        yield pd.DataFrame({"doc": pd.Series(out_docs, dtype="object")})
 
 
 def read_xml(
     spark: SparkSession,
     path: str,
     parser_config: Optional[dict[str, Any]] = None,
-    include_path: bool = False,
 ) -> DataFrame:
     """Parse XML file(s) at ``path`` into one all-string DataFrame."""
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
+    binary = spark.read.format("binaryFile").load(path).select("content")
     docs = binary.mapInPandas(_parse_partition, schema=_OUT_SCHEMA)
     # Key discovery: union of record keys, JVM-side, one small shuffle.
     keys = [
@@ -107,7 +98,4 @@ def read_xml(
     if not keys:
         # reference: zero <record> elements → parse error (xml_parser.rs:66-69)
         raise ParseError(f"No records found in XML file: {path}")
-    cols = [F.col("doc").getItem(k).alias(k) for k in keys]
-    if include_path:
-        cols = [F.col("path")] + cols
-    return docs.select(*cols)
+    return docs.select(*[F.col("doc").getItem(k).alias(k) for k in keys])

@@ -88,10 +88,10 @@ def test_quoted_fields(spark, tmp_path):
 
 
 def test_single_column_no_slack(spark, tmp_path):
-    # width == 1 (one header, ragged_extra_columns=0) must not crash the
-    # greatest()-based present-but-empty restore
+    # a single header column (all other read columns are slack) keeps
+    # its values through the present-but-empty restore
     p = write(tmp_path, "one.csv", "h\nv1\n\nv2\n")
-    rows = [r["h"] for r in read_csv(spark, p, {"ragged_extra_columns": 0}).collect()]
+    rows = [r["h"] for r in read_csv(spark, p).collect()]
     assert sorted(x for x in rows if x is not None) == ["v1", "v2"]
 
 

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from data_ingestion_spark.sources import read_json, read_txt
+from data_ingestion_spark.sources import read_json, read_txt, txt_source
 
 
 def write(tmp_path, name, content):
@@ -76,24 +76,26 @@ def test_txt_empty_interior_lines_kept(spark, tmp_path):
     ]
 
 
-def test_txt_distributed_mode(spark, tmp_path):
+def test_txt_distributed_mode(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(txt_source, "WHOLEFILE_MAX_BYTES", 0)
     lines = [f"line-{i}" for i in range(100)]
     p = write(tmp_path, "big.txt", "\n".join(lines) + "\n")
-    df = read_txt(spark, p, {"mode": "distributed"})
+    df = read_txt(spark, p)
     rows = sorted(as_dicts(df), key=lambda r: r["line_number"])
     assert [r["content"] for r in rows] == lines
     assert [r["line_number"] for r in rows] == list(range(1, 101))
 
 
-def test_txt_distributed_multisplit(spark, tmp_path):
+def test_txt_distributed_multisplit(spark, tmp_path, monkeypatch):
     """Pin the distributed-mode ordering guarantee when ONE file spans
     MULTIPLE input splits (the monotonically_increasing_id assumption)."""
+    monkeypatch.setattr(txt_source, "WHOLEFILE_MAX_BYTES", 0)
     lines = [f"row-{i:06d}-" + "x" * 120 for i in range(5000)]
     p = write(tmp_path, "huge.txt", "\n".join(lines) + "\n")
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(64 * 1024))
-        df = read_txt(spark, p, {"mode": "distributed"})
+        df = read_txt(spark, p)
         assert df.rdd.getNumPartitions() >= 1
         src = spark.read.text(p)
         assert src.rdd.getNumPartitions() > 4  # the premise: really split
@@ -117,11 +119,12 @@ def test_txt_multifile_trailing_trim_per_file(spark, tmp_path):
     assert sum(1 for r in rows if r["line_number"] == 1) == 2
 
 
-def test_txt_auto_mode_switches_on_size(spark, tmp_path):
+def test_txt_auto_mode_switches_on_size(spark, tmp_path, monkeypatch):
     p = write(tmp_path, "auto.txt", "a\nb\nc\n")
-    # tiny threshold → auto picks distributed; result identical either way
+    # tiny threshold → distributed reader; result identical either way
+    monkeypatch.setattr(txt_source, "WHOLEFILE_MAX_BYTES", 2)
     rows = sorted(
-        as_dicts(read_txt(spark, p, {"wholefile_max_bytes": 2})),
+        as_dicts(read_txt(spark, p)),
         key=lambda r: r["line_number"],
     )
     assert [r["content"] for r in rows] == ["a", "b", "c"]

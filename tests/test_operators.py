@@ -327,6 +327,16 @@ def test_connected_components_chain_and_islands(spark):
     assert out == {1: 1, 2: 1, 3: 1, 99: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    # a 12-node chain needs ~11 label-propagation rounds; 3 rounds leave
+    # partial labels, which must not be returned as components
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="still changing after 3 rounds"):
+        dedup.connected_components(edges, max_iter=3)
+
+
 def test_hash_sample_deterministic_and_stable_under_repartition(spark):
     from data_ingestion_spark.operators import sampling
 

@@ -102,16 +102,6 @@ def test_unsupported_type_rejected_and_logged(spark, warehouse, bucket):
     assert "Unsupported file type" in logs[0]["message"]
 
 
-def test_compat_reference_logs_gap(spark, warehouse, bucket):
-    # compat flag replicates the reference's no-log-row-on-early-failure
-    import os
-
-    pipe = make_pipeline(spark, warehouse, bucket, compat_reference_logs=True)
-    with pytest.raises(ConfigError):
-        pipe.process_key("test-bucket", "uploads/report.pdf")
-    assert not os.path.exists(pipe.log.path)
-
-
 def test_no_rule_match(spark, warehouse, bucket):
     pipe = make_pipeline(spark, warehouse, bucket)
     with pytest.raises(ConfigError, match="No configuration found"):
@@ -140,17 +130,6 @@ def test_heterogeneous_schema_union(spark, warehouse, bucket, tmp_path):
     assert out.count() == 2
 
 
-def test_orc_sink_roundtrip(spark, tmp_path):
-    from data_ingestion_spark.sinks.parquet_sink import ParquetSink
-
-    sink = ParquetSink(spark, str(tmp_path / "wh"), fmt="orc")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    assert sink.insert_documents("t_orc", df) == 2
-    assert sink.insert_documents("t_orc", df.filter("id = 1")) == 1
-    out = sorted((r["id"], r["v"]) for r in sink.read_table("t_orc").collect())
-    assert out == [(1, "a"), (1, "a"), (2, "b")]
-
-
 def test_register_parser_plugin_kv_format(spark, tmp_path):
     """User-extensible parser registry (the reference's DataParser trait,
     ports.rs:11-14): plug in a pure-DataFrame '.kv' parser and dispatch
@@ -176,7 +155,7 @@ def test_register_parser_plugin_kv_format(spark, tmp_path):
         dispatch.register_parser("kv", read_kv)
         out = dispatch.parse_file(spark, str(p)).orderBy("a").collect()
         assert [(r["a"], r["b"]) for r in out] == [("1", "2"), ("3", "4")]
-        # shadowing a built-in without overwrite is refused
+        # shadowing a built-in is refused
         with pytest.raises(ValueError):
             dispatch.register_parser("csv", read_kv)
         # bad names are refused

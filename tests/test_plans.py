@@ -1137,6 +1137,21 @@ def test_plans_artifact_covers_registry():
     assert not stale, f"PLANS.md rows for unregistered queries: {sorted(stale)}"
 
 
+def test_merged_queries_surfaces_registry_import_error(monkeypatch):
+    """A registry module that fails to import must raise its own
+    ImportError, not drop out of the pool and resurface as a missing
+    _PRIORITY name."""
+    import sys
+
+    import data_ingestion_spark.operators as ops
+    import data_ingestion_spark.operators.registry3  # noqa: F401
+
+    monkeypatch.delattr(ops, "registry3")
+    monkeypatch.setitem(sys.modules, "data_ingestion_spark.operators.registry3", None)
+    with pytest.raises(ImportError, match="registry3"):
+        merged_queries()
+
+
 def test_jaccard_family_probes_stored_shingle_base(spark):
     """r11 (the r10 verdict's task #4): every exact-Jaccard consumer must
     READ THE COMMITTED SHINGLE-BASE SNAPSHOT (vtab_base_*/vtab_fpos_*
