@@ -15,6 +15,9 @@ Cross-cutting semantics preserved (SURVEY.md §3.4):
 - audit-log: open row before insert, finalize row after, finalize errors
   swallowed (ingestion_service.rs:124)
 
+The sink's write is the one Spark action on the parsed frame; for what a
+zero-row parse writes, see ``ParquetSink.insert_documents``.
+
 Deliberate upgrades (each flagged):
 - failures in steps 1-4 ARE logged (the reference only logs insert-phase
   failures, so an early failure leaves no log row — SURVEY.md §2.3 L3)
@@ -28,7 +31,7 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .errors import FetchError, IngestionError, ParseError
@@ -123,23 +126,14 @@ class IngestionPipeline:
             "log_id", F.lit(log_id)
         )
         try:
+            rows = self.sink.insert_documents(rule.target_table, enriched)
+        except Exception as ex:  # noqa: BLE001 — sink failures → Failed log
             try:
-                rows = self.sink.insert_documents(rule.target_table, enriched)
-            except Exception as ex:  # noqa: BLE001 — sink failures → Failed log
-                try:
-                    self.log.finalize_log(
-                        log_id, file.file_name, start, False, str(ex)
-                    )
-                except Exception:  # noqa: BLE001,S110
-                    pass  # finalize errors swallowed (ingestion_service.rs:124)
-                return IngestResult(file.file_name, rule.target_table, log_id, 0,
-                                    "Failed", str(ex))
-        finally:
-            # CSV parse caches itself so slack-column detection and the sink
-            # share one file scan — release after the write either way.
-            cache = getattr(df, "_csv_cache", None)
-            if cache is not None:
-                cache.unpersist()
+                self.log.finalize_log(log_id, file.file_name, start, False, str(ex))
+            except Exception:  # noqa: BLE001,S110
+                pass  # finalize errors swallowed (ingestion_service.rs:124)
+            return IngestResult(file.file_name, rule.target_table, log_id, 0,
+                                "Failed", str(ex))
         try:
             self.log.finalize_log(log_id, file.file_name, start, True, None)
         except Exception:  # noqa: BLE001,S110

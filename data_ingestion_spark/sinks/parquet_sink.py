@@ -7,13 +7,17 @@ across heterogeneous files of the same target table (Mongo tolerated
 per-doc schemas natively) is handled with union-by-name + nulls
 (SURVEY.md §1.3): parquet readers merge schemas, and appends with
 ``mergeSchema`` keep old files readable.
+
+The write is the sink's only Spark action on a parsed frame: the row count
+is observed on it, not taken by a separate ``count()`` (zero-row inputs:
+see ``ParquetSink.insert_documents``).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 class ParquetSink:
@@ -25,24 +29,26 @@ class ParquetSink:
         return os.path.join(self.warehouse_dir, target_table)
 
     def insert_documents(self, target_table: str, df: DataFrame) -> int:
-        """Append df to the target table; returns the row count written
-        (the reference returns inserted ids; counts are what its audit layer
-        actually consumes — ingestion_service.rs:77)."""
+        """Append df to the target table; returns the row count written,
+        taken from the write (the reference returns inserted ids; counts are
+        what its audit layer actually consumes — ingestion_service.rs:77).
+
+        Zero-row inputs: a df with no columns (empty JSON array, header-less
+        xlsx) writes nothing. A df with columns but no rows (header-only CSV,
+        empty TXT, text-less PDF) appends one schema-only file, no documents.
+        The reference skips every empty insert (data_repo.rs:23-26) only
+        because Mongo's ``insert_many`` rejects an empty list."""
         if not df.columns:
-            return 0  # empty-batch short-circuit (data_repo.rs:23-26)
-        n = df.count()
-        if n == 0:
-            return 0
+            return 0  # no schema to write
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         df.write.mode("append").parquet(self.table_path(target_table))
-        return n
+        return obs.get["rows"]
 
     def read_table(self, target_table: str) -> DataFrame:
         return self.spark.read.option("mergeSchema", True).parquet(
             self.table_path(target_table)
         )
-
-    def table_exists(self, target_table: str) -> bool:
-        return os.path.exists(self.table_path(target_table))
 
 
 def write_partitioned(
@@ -108,7 +114,8 @@ def compact_table(
     ``n_files`` overrides the byte-target sizing with an explicit output
     count (deterministic layouts for tests/oracles).
 
-    Returns {"files_before", "files_after", "bytes", "rows"}.
+    Returns {"files_before", "files_after", "bytes", "rows"}; ``rows`` is
+    counted by the rewrite itself.
     """
     import math
     import shutil
@@ -129,7 +136,6 @@ def compact_table(
         # footer-free planning: output count from on-disk bytes alone
         n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
     df = spark.read.option("mergeSchema", True).format(fmt).load(path)
-    rows = df.count()
     tmp = path.rstrip("/") + ".compact_tmp"
     if cluster_by:
         # clustered rewrite: one range shuffle buys min/max page skipping
@@ -140,6 +146,8 @@ def compact_table(
     else:
         # coalesce (not repartition): narrowing to n_files needs no shuffle
         out = df.coalesce(n_files)
+    obs = Observation()
+    out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
     out.write.mode("overwrite").format(fmt).save(tmp)
     old = path.rstrip("/") + ".compact_old"
     os.rename(path, old)
@@ -149,7 +157,7 @@ def compact_table(
         "files_before": len(before),
         "files_after": len(_data_files(path)),
         "bytes": total_bytes,
-        "rows": rows,
+        "rows": obs.get["rows"],
     }
 
 

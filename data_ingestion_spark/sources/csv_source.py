@@ -30,6 +30,9 @@ Spark design:
   pinned to an unmatchable sentinel so QUOTED empty fields survive as ``""``.
 - The scan is fully parallel (splittable CSV, no multiLine); only the header
   line is fetched eagerly, via a LIMIT-1 text read.
+- The file is scanned twice: once eagerly, by the aggregate that finds
+  which slack columns carry data, and once by the caller's action on the
+  returned frame (the sink's write).
 """
 
 from __future__ import annotations
@@ -130,14 +133,11 @@ def read_csv(
         ]
     )
 
-    # Which slack columns actually carry data? The live-extras aggregate
-    # needs one full pass, and the caller's consumption is a second — so the
-    # parsed frame is persisted (memory-and-disk) and BOTH read the cache:
-    # one file scan total. The cache handle rides on the returned DataFrame
-    # (`_csv_cache`); IngestionPipeline unpersists it after the sink write.
+    # Which slack columns actually carry data? The live-extras aggregate is
+    # one pass over the file; the caller's consumption (the sink's write) is
+    # the second.
     extra_cols = [f"_f{i}" for i in range(len(headers), width)]
-    cached = df.persist()
-    counts = cached.agg(
+    counts = df.agg(
         *[F.count(F.col(c)).alias(c) for c in extra_cols]
     ).collect()[0]
     live_extras = [c for c in extra_cols if counts[c] > 0]
@@ -149,6 +149,4 @@ def read_csv(
         idx = int(c[2:])
         # reference keys overflow fields column_{overall 0-based index}
         select.append(F.col(c).alias(f"column_{idx}"))
-    out = cached.select(*select)
-    out._csv_cache = cached  # type: ignore[attr-defined]
-    return out
+    return df.select(*select)

@@ -14,7 +14,8 @@ path (one JSON doc per line parses in parallel across executors).
 Top-level scalars (a file containing just ``42``): Spark surfaces no columns;
 the rebuild maps them to a single-row ``{"value": <scalar>}`` frame —
 documented deviation (the reference emits the bare scalar, which its own
-Mongo sink cannot store anyway).
+Mongo sink cannot store anyway). An empty top-level array (``[]``) yields a
+frame with no columns and no rows.
 """
 
 from __future__ import annotations
@@ -50,6 +51,10 @@ def read_json(
             F.col("value"),
         )
         row = parsed.collect()[0]
+        if row["arr"] == []:
+            # no documents and no columns, so the sink writes nothing (a
+            # placeholder ``value string`` would clash with real columns)
+            return spark.createDataFrame([], "__empty string").drop("__empty")
         if row["arr"] is not None:
             return spark.createDataFrame(
                 [(v,) for v in row["arr"]], "value: string"

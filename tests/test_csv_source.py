@@ -105,3 +105,11 @@ def test_directory_header_from_first_file(spark, tmp_path):
     assert sorted(df.columns) == ["age", "name"]
     got = sorted(r["name"] for r in df.collect() if r["name"] != "name")
     assert got == ["Alice", "Bob"]
+
+
+def test_read_csv_leaves_no_persisted_rdd(spark, tmp_path):
+    # the parse caches nothing, so a direct caller has nothing to release
+    p = write(tmp_path, "r.csv", "a,b\n1,2\n3,4,5\n")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert len(read_csv(spark, p).collect()) == 2
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted

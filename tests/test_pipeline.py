@@ -3,11 +3,14 @@ dev-test.sh + manual mongosh verification (SURVEY.md §3.3 / §5)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from data_ingestion_spark.errors import ConfigError, FetchError, ParseError
 from data_ingestion_spark.pipeline import FileToProcess, IngestionPipeline
-from data_ingestion_spark.sources.dispatch import extract_file_type
+from data_ingestion_spark.sinks.parquet_sink import ParquetSink
+from data_ingestion_spark.sources.dispatch import extract_file_type, parse_file
 
 
 @pytest.fixture()
@@ -16,6 +19,7 @@ def bucket(tmp_path):
     (b / "uploads").mkdir(parents=True)
     (b / "logs").mkdir()
     (b / "uploads" / "people.csv").write_text("name,age,city\nJohn,30,NYC\nJane,25,LA\n")
+    (b / "uploads" / "header_only.csv").write_text("name,age,city\n")
     (b / "uploads" / "test_no_headers.csv").write_text("John,30,john@x.com,NYC\n")
     (b / "uploads" / "data.json").write_text('[{"name":"Alice","value":100}]')
     (b / "logs" / "app.txt").write_text("started\ndone\n")
@@ -39,10 +43,18 @@ def test_extract_file_type():
 
 def test_csv_end_to_end(spark, warehouse, bucket):
     pipe = make_pipeline(spark, warehouse, bucket)
+    # a zero-row parse succeeds and appends a schema-only file, no documents
+    empty = pipe.process_key("test-bucket", "uploads/header_only.csv")
+    assert empty.status == "Success" and empty.rows == 0
+    assert pipe.sink.read_table("csv_data").columns == [
+        "name", "age", "city", "file_name", "log_id",
+    ]
     res = pipe.process_key("test-bucket", "uploads/people.csv")
     assert res.status == "Success" and res.rows == 2
     out = pipe.sink.read_table("csv_data")
+    assert out.filter(out.file_name == empty.file_name).count() == 0
     rows = {r["name"]: r.asDict() for r in out.collect()}
+    assert set(rows) == {"John", "Jane"}
     assert rows["John"]["age"] == "30"
     # enrichment (ingestion_service.rs:81-90, data_repo.rs:36-39)
     assert rows["John"]["file_name"] == "test-bucket/uploads/people.csv"
@@ -51,6 +63,39 @@ def test_csv_end_to_end(spark, warehouse, bucket):
     log = {r["log_id"]: r.asDict() for r in pipe.log.current_status().collect()}
     assert log[res.log_id]["status"] == "Success"
     assert log[res.log_id]["end_time"] is not None
+
+
+@pytest.mark.parametrize(
+    "name,content",
+    [
+        ("ragged.csv", "a,b\n1,2\n3,4,5\n"),
+        ("recs.xml", "<data><record id='1'><name>X</name></record><record id='2'/></data>"),
+    ],
+    ids=["ragged_csv", "xml"],
+)
+def test_sink_insert_is_one_spark_job(spark, tmp_path, name, content):
+    # the write is the sink's only action: rows come from the write itself
+    p = tmp_path / name
+    p.write_text(content)
+    df = parse_file(spark, str(p), extract_file_type(name), None)
+    sink = ParquetSink(spark, str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    group = f"sink-insert-{uuid.uuid4().hex}"
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    sc.setJobGroup(group, "sink insert")
+    try:
+        rows = sink.insert_documents("t", df)
+        inserted = jobs()
+        assert sink.read_table("t").count() == rows == 2
+        read = jobs()  # the group does see the read's jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(inserted) == 1
+    assert len(read) > len(inserted)
 
 
 def test_no_headers_rule_routing(spark, warehouse, bucket):
@@ -120,14 +165,20 @@ def test_heterogeneous_schema_union(spark, warehouse, bucket, tmp_path):
     import os
 
     b = os.path.join(bucket, "test-bucket", "uploads")
+    open(os.path.join(b, "j0.json"), "w").write("[]")
     open(os.path.join(b, "j1.json"), "w").write('[{"a": 1}]')
     open(os.path.join(b, "j2.json"), "w").write('[{"b": "x"}]')
     pipe = make_pipeline(spark, warehouse, bucket)
+    # an empty array lands nothing, not a placeholder column that would
+    # clash with data.json's long ``value`` on the merged read
+    empty = pipe.process_key("test-bucket", "uploads/j0.json")
+    assert empty.status == "Success" and empty.rows == 0
     pipe.process_key("test-bucket", "uploads/j1.json")
     pipe.process_key("test-bucket", "uploads/j2.json")
+    pipe.process_key("test-bucket", "uploads/data.json")
     out = pipe.sink.read_table("json_data")
-    assert {"a", "b"} <= set(out.columns)
-    assert out.count() == 2
+    assert {"a", "b", "value"} <= set(out.columns)
+    assert out.count() == 3
 
 
 def test_register_parser_plugin_kv_format(spark, tmp_path):

@@ -338,27 +338,6 @@ def test_q6_pushdown_and_single_agg(spark):
     assert "partial_sum" in plan
 
 
-def test_csv_read_single_file_scan(spark, tmp_path):
-    """The parsed CSV caches itself so slack-column detection and the
-    consumer share ONE file scan — the consumer plan must read the cache
-    (InMemoryTableScan), not re-scan the file."""
-    p = tmp_path / "c.csv"
-    p.write_text("a,b\n1,2\n3,4,5\n")
-    from data_ingestion_spark.sources import read_csv
-
-    df = read_csv(spark, str(p))
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = df._jdf.queryExecution().explainString(mode)
-    try:
-        assert "InMemoryTableScan" in plan
-    finally:
-        cache = getattr(df, "_csv_cache", None)
-        if cache is not None:
-            cache.unpersist()
-
-
 def test_ngram_topk_is_take_ordered(spark):
     """Corpus top-k n-grams must cut per-partition (TakeOrdered), never
     plan a global Sort of the full n-gram frequency table."""
